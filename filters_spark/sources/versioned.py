@@ -14,7 +14,7 @@ path/
   snap/v=N/                immutable parquet data files for snapshot N
   changes/v=N/             optional stored change files for commit N
   _manifests/N.json        {version, parent, op, schema_json, n_files}
-  _manifests/N.stats.json  per-file min/max sidecar (lazy; O(files))
+  _manifests/N.{kind}.json per-file stats/bloom/ndv/hdr sidecars (lazy)
   _latest                  text pointer to the current version (atomic)
 ```
 
@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (callers compose)
@@ -425,59 +426,54 @@ def _bloom_member(hexmap: str, value, bits: int, hashes: int) -> bool:
                _bloom_positions_py(value, bits, hashes))
 
 
-def _file_blooms(path: str, files: list[str], cols: list[str],
-                 bits: int, hashes: int, schema: T.StructType,
-                 spark: SparkSession) -> dict:
-    """Per-file Bloom bitmaps (hex) for ``cols`` over the given
-    TABLE-ROOT-relative files: ONE job per column — distinct
-    (file, position) pairs, shuffle bounded by files × bits, the
-    collect bounded the same way (the stats-sidecar contract: driver
-    state is metadata-sized, never data-sized)."""
-    if not files:
-        return {}
-    out: dict = {f: {} for f in files}
-    abs_paths = [os.path.join(path, f) for f in files]
-    for col in cols:
-        df = (spark.read.schema(schema).parquet(*abs_paths)
-              .select(F.input_file_name().alias("_uri"),
-                      F.col(col).cast("string").alias("_v"))
-              .where(F.col("_v").isNotNull()))
-        pos = [
-            (F.conv(F.substring(
-                F.md5(F.concat(F.lit(f"{i}|"), F.col("_v"))), 1, 8),
-                16, 10).cast("bigint") % bits).cast("int")
-            for i in range(hashes)]
-        rows = (df.select("_uri", F.explode(F.array(*pos)).alias("_p"))
-                .distinct()
-                .groupBy("_uri").agg(F.collect_set("_p").alias("ps"))
-                .collect())              # bounded: files × bits
-        by_rel = {_rel_uri(path, r["_uri"]): r["ps"] for r in rows}
-        for f in files:
-            ps = by_rel.get(f)
-            if ps is None:
-                out[f][col] = "0"        # no non-null values: empty map
-            else:
-                bm = 0
-                for p in ps:
-                    bm |= 1 << p
-                out[f][col] = f"{bm:x}"
+def _file_blooms(col: str, cfg: dict) -> list[tuple[Column, Column]]:
+    """Bloom build hook: each value sets ``bloom_hashes`` md5-convention
+    positions, bucketed as (64-bit word index, one-bit mask) so the
+    OR-merge leaves at most ``bloom_bits / 64`` buckets per file."""
+    v = F.col(col).cast("string")
+    out = []
+    for i in range(cfg["bloom_hashes"]):
+        p = F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}|"), v)), 1, 8),
+                   16, 10).cast("bigint") % cfg["bloom_bits"]
+        out.append((F.shiftright(p, 6),
+                    F.call_function("shiftleft", F.lit(1).cast("bigint"),
+                                    (p % 64).cast("int"))))
     return out
+
+
+def _bloom_finish(buckets: list, cfg: dict) -> str:
+    bm = 0
+    for word, bits, _n in buckets:
+        bm |= (bits & 0xFFFFFFFFFFFFFFFF) << (64 * word)
+    return f"{bm:x}"                  # "0": no non-null values
+
+
+def _bloom_check(cfg: dict, schema: T.StructType,
+                 partition_by) -> None:
+    cols = cfg["bloom_cols"]
+    bad = [c for c in cols if c in (partition_by or ())]
+    if bad:
+        raise ValueError(
+            f"write_versioned: bloom_cols {bad} are partition "
+            "columns — their col=value path already prunes "
+            "via stats_cols")
+    types = {f.name: f.dataType.typeName() for f in schema}
+    badtype = [(c, types.get(c)) for c in cols
+               if types.get(c) not in _BLOOM_TYPES]
+    if badtype:
+        raise ValueError(
+            f"write_versioned: bloom_cols {badtype} have types "
+            "whose Spark string cast differs from the Python "
+            "probe rendering (double '1e+20' vs '1.0E20', "
+            "boolean 'True' vs 'true', ...) — membership would "
+            "silently miss and point reads would DROP matching "
+            f"files.  Supported types: {_BLOOM_TYPES}")
 
 
 def load_file_blooms(manifest: dict) -> dict | None:
     """Per-file Bloom bitmaps, resolving the lazy ``bloom_file``
-    sidecar (mirrors :func:`load_file_stats`)."""
-    blooms = manifest.get("file_blooms")
-    if blooms is None and manifest.get("bloom_file") \
-            and manifest.get("_manifest_dir"):
-        try:
-            with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["bloom_file"])) as fh:
-                blooms = json.load(fh)
-        except FileNotFoundError:
-            return None
-        manifest["file_blooms"] = blooms
-    return blooms
+    sidecar (see :func:`load_file_stats`)."""
+    return _load_sidecar(manifest, "bloom")
 
 
 def bloom_prune_files(manifest: dict, where, files: list) -> list:
@@ -516,116 +512,136 @@ def bloom_prune_files(manifest: dict, where, files: list) -> list:
 # sketch.hll_table over the full scan would produce, replayable in
 # SQL (the prof_hll_calibration machinery).
 
-def _file_ndv(path: str, files: list[str], cols: list[str],
-              schema: T.StructType, spark: SparkSession) -> dict:
-    """Per-file HLL registers for ``cols`` over TABLE-ROOT-relative
-    files: one job per column, collect bounded by files × 256
-    buckets (the bloom-sidecar contract)."""
+def _file_ndv(col: str, cfg: dict) -> list[tuple[Column, Column]]:
+    """NDV build hook: one (HLL bucket, ``1 << rho``) pair per value —
+    the OR-merge's highest set bit is the bucket's max rho, so the
+    sidecar keeps ≤ 256 registers per file."""
     from ..functions.sketch import _hll_parts
 
-    if not files:
-        return {}
-    out: dict = {f: {} for f in files}
-    abs_paths = [os.path.join(path, f) for f in files]
-    for col in cols:
-        bucket, rho = _hll_parts(F.col(col))
-        rows = (spark.read.schema(schema).parquet(*abs_paths)
-                .where(F.col(col).isNotNull())
-                .select(F.input_file_name().alias("_uri"),
-                        bucket.alias("b"), rho.alias("r"))
-                .groupBy("_uri", "b").agg(F.max("r").alias("mr"))
-                .collect())                 # bounded: files × 256
-        regs: dict = {}
-        for r in rows:
-            regs.setdefault(_rel_uri(path, r["_uri"]), {})[
-                str(int(r["b"]))] = int(r["mr"])
-        for f in files:
-            out[f][col] = regs.get(f, {})
-    return out
+    bucket, rho = _hll_parts(F.col(col))
+    return [(bucket, F.call_function("shiftleft", F.lit(1).cast("bigint"),
+                                     rho))]
 
 
-def load_file_ndv(manifest: dict) -> dict | None:
-    """Per-file NDV registers, resolving the lazy ``ndv_file``
-    sidecar (mirrors :func:`load_file_blooms`)."""
-    ndv = manifest.get("file_ndv")
-    if ndv is None and manifest.get("ndv_file") \
-            and manifest.get("_manifest_dir"):
-        try:
-            with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["ndv_file"])) as fh:
-                ndv = json.load(fh)
-        except FileNotFoundError:
-            return None
-        manifest["file_ndv"] = ndv
-    return ndv
+def _ndv_finish(buckets: list, cfg: dict) -> dict:
+    return {str(b): bits.bit_length() - 1 for b, bits, _n in buckets}
 
 
-def _root_ndv(path: str, manifest: dict) -> dict:
-    ndv = load_file_ndv(manifest) or {}
-    if manifest.get("data_files") is not None:
-        return dict(ndv)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in ndv.items()}
-
-
-def _file_hdr(path: str, files: list[str], cols: list[str],
-              schema: T.StructType, spark: SparkSession) -> dict:
-    """Per-file HDR histogram buckets for POSITIVE-integer ``cols``
-    (the engine's ``sketch.hdr_table`` convention, sub_bits=3): one
-    job per column, collect bounded by files × 512 buckets.  A
-    non-positive value fails the COMMIT loudly (the hdr_table
-    raise_error contract — a silent drop would skew every rank
-    served later)."""
+def _file_hdr(col: str, cfg: dict) -> list[tuple[Column, Column]]:
+    """HDR build hook for POSITIVE-integer columns (the engine's
+    ``sketch.hdr_table`` convention, sub_bits=3): one (``shift·16 +
+    top``, 0) pair per value, counted per bucket — ≤ 512 buckets per
+    file.  A non-positive value fails the COMMIT loudly (the
+    hdr_table raise_error contract — a silent drop would skew every
+    rank served later)."""
     from ..functions.sketch import _bit_length
 
-    if not files:
-        return {}
-    out: dict = {f: {} for f in files}
-    abs_paths = [os.path.join(path, f) for f in files]
-    for col in cols:
-        v = F.when(F.col(col) > 0, F.col(col).cast("long")).otherwise(
-            F.raise_error(F.lit(
-                f"write_versioned(hdr_cols): non-positive {col} "
-                "values — the log bucket needs v > 0")))
-        shift = F.greatest(_bit_length(v) - F.lit(4), F.lit(0))
-        rows = (spark.read.schema(schema).parquet(*abs_paths)
-                .where(F.col(col).isNotNull())
-                .select(F.input_file_name().alias("_uri"),
-                        shift.cast("int").alias("_sh"), v.alias("_v"))
-                .select("_uri", "_sh",
-                        F.expr("shiftright(_v, _sh)").alias("_top"))
-                .groupBy("_uri", "_sh", "_top")
-                .agg(F.count(F.lit(1)).cast("long").alias("n"))
-                .collect())                 # bounded: files × 512
-        buckets: dict = {}
-        for r in rows:
-            buckets.setdefault(_rel_uri(path, r["_uri"]), {})[
-                f"{int(r['_sh'])},{int(r['_top'])}"] = int(r["n"])
-        for f in files:
-            out[f][col] = buckets.get(f, {})
-    return out
+    v = F.when(F.col(col) > 0, F.col(col).cast("long")).otherwise(
+        F.raise_error(F.lit(
+            f"write_versioned(hdr_cols): non-positive {col} "
+            "values — the log bucket needs v > 0")))
+    shift = F.greatest(_bit_length(v) - F.lit(4), F.lit(0)).cast("int")
+    top = F.call_function("shiftright", v, shift)
+    return [(shift.cast("bigint") * 16 + top, F.lit(0))]
 
 
-def load_file_hdr(manifest: dict) -> dict | None:
-    hdr = manifest.get("file_hdr")
-    if hdr is None and manifest.get("hdr_file") \
+def _hdr_finish(buckets: list, cfg: dict) -> dict:
+    return {f"{b >> 4},{b & 15}": n for b, _bits, n in buckets}
+
+
+# --- The sidecar spec table -------------------------------------------------
+#
+# Every per-file sidecar is one _Sidecar: its kind names the manifest
+# keys (``{kind}_cols``, ``{kind}_file``, plus ``sizing``) and the
+# ``{version}.{kind}.json`` file.  write_versioned resolves, builds,
+# carries and writes every kind through one path; readers, verify and
+# stats_aggregate load them through _load_sidecar / _root_sidecar.
+# Scan-built kinds emit (bucket, bits) pairs per non-null value from
+# ``build``; ONE scan of the new files groups them per (file, column,
+# bucket) with an OR of the bits and a row count, and ``finish``
+# turns one file-column's buckets into its JSON entry.
+
+
+class _Sidecar(NamedTuple):
+    kind: str
+    sizing: dict             # extra config keys -> default values
+    table_property: bool     # inherited (parent or _carry_from) if not given
+    build: Callable | None   # (col, cfg) -> [(bucket, bits)]; None = footers
+    finish: Callable | None  # (buckets [(b, bits, n)], cfg) -> entry
+    check: Callable | None = None   # (cfg, schema, partition_by) raises
+
+
+_SIDECARS = (
+    _Sidecar("stats", {}, False, None, None),
+    _Sidecar("bloom", {"bloom_bits": _BLOOM_DEFAULT_BITS,
+                       "bloom_hashes": _BLOOM_DEFAULT_HASHES},
+             True, _file_blooms, _bloom_finish, _bloom_check),
+    _Sidecar("ndv", {}, True, _file_ndv, _ndv_finish),
+    _Sidecar("hdr", {}, True, _file_hdr, _hdr_finish),
+)
+
+
+def _load_sidecar(manifest: dict, kind: str) -> dict | None:
+    """Per-file entries of one sidecar kind, resolving the lazy
+    ``{kind}_file`` sidecar next to the manifest (cached in the dict
+    as ``file_{kind}``; inline ``file_stats`` of pre-sidecar manifests
+    still works).  None when the snapshot recorded none or the
+    sidecar is gone."""
+    cache = f"file_{kind}"
+    entries = manifest.get(cache)
+    if entries is None and manifest.get(f"{kind}_file") \
             and manifest.get("_manifest_dir"):
         try:
             with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["hdr_file"])) as fh:
-                hdr = json.load(fh)
+                                   manifest[f"{kind}_file"])) as fh:
+                entries = json.load(fh)
         except FileNotFoundError:
-            return None
-        manifest["file_hdr"] = hdr
-    return hdr
+            return None                     # sidecar gone: no pruning
+        manifest[cache] = entries
+    return entries
 
 
-def _root_hdr(path: str, manifest: dict) -> dict:
-    hdr = load_file_hdr(manifest) or {}
+def _root_sidecar(manifest: dict, kind: str) -> dict:
+    """A snapshot's per-file entries of one kind re-keyed TABLE-ROOT-
+    relative (the file-reuse sidecar keying), empty when none."""
+    entries = _load_sidecar(manifest, kind) or {}
     if manifest.get("data_files") is not None:
-        return dict(hdr)
+        return dict(entries)
     v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in hdr.items()}
+    return {f"snap/v={v}/{k}": e for k, e in entries.items()}
+
+
+def _scan_sidecars(path: str, files: list[str], armed: list[tuple],
+                   schema: T.StructType, spark: SparkSession) -> dict:
+    """Build every scan-kind column of ``armed`` — ``(spec, col, cfg)``
+    triples — over the TABLE-ROOT-relative ``files`` in ONE scan and
+    one bounded collect: a row per (file, armed column) holding at
+    most that kind's bucket count (the stats-sidecar contract: driver
+    state is metadata-sized, never data-sized).  Returns
+    ``{(kind, col): {file: entry}}``.  The per-value ``isNotNull``
+    guard sits inside the projection, so NULLs add nothing and never
+    reach a hook's ``raise_error``."""
+    elems = [F.when(F.col(col).isNotNull(), F.struct(
+        F.lit(i).alias("_i"), b.cast("bigint").alias("_b"),
+        bits.cast("bigint").alias("_x")))
+        for i, (spec, col, cfg) in enumerate(armed)
+        for b, bits in spec.build(col, cfg)]
+    rows = (spark.read.schema(schema)
+            .parquet(*[os.path.join(path, f) for f in files])
+            .select(F.input_file_name().alias("_uri"),
+                    F.explode(F.array(*elems)).alias("_e"))
+            .where(F.col("_e").isNotNull())
+            .select("_uri", "_e.*")
+            .groupBy("_uri", "_i", "_b")
+            .agg(F.bit_or("_x").alias("_x"),
+                 F.count(F.lit(1)).alias("_n"))
+            .groupBy("_uri", "_i")
+            .agg(F.collect_list(F.array("_b", "_x", "_n")).alias("_a"))
+            .collect())          # bounded: files × armed cols × buckets
+    got = {(_rel_uri(path, r["_uri"]), r["_i"]): r["_a"] for r in rows}
+    return {(spec.kind, col): {f: spec.finish(got.get((f, i), []), cfg)
+                               for f in files}
+            for i, (spec, col, cfg) in enumerate(armed)}
 
 
 def _hdr_quantile_py(buckets: dict, q_num: int, q_den: int) -> int | None:
@@ -785,7 +801,7 @@ def stats_aggregate(spark: SparkSession, path: str,
         return _fallback("min/max under a predicate needs row-level "
                          "evaluation")
     files = _root_files(path, m)
-    stats = _root_stats(path, m)
+    stats = _root_sidecar(m, "stats")
     schema = T.StructType.fromJson(json.loads(m["schema_json"]))
     types = {f.name: f.dataType for f in schema.fields}
 
@@ -833,7 +849,7 @@ def stats_aggregate(spark: SparkSession, path: str,
         if fn == "approx_quantile":
             cname, qn, qd = col
             if hdr_buckets is None:
-                hdr_buckets = _root_hdr(path, m)
+                hdr_buckets = _root_sidecar(m, "hdr")
             merged_h: dict = {}
             for f in files:
                 b = (hdr_buckets.get(f) or {}).get(cname)
@@ -849,7 +865,7 @@ def stats_aggregate(spark: SparkSession, path: str,
             continue
         if fn == "approx_ndv":
             if ndv_regs is None:
-                ndv_regs = _root_ndv(path, m)
+                ndv_regs = _root_sidecar(m, "ndv")
             merged: dict = {}
             for f in files:
                 regs = (ndv_regs.get(f) or {}).get(col)
@@ -904,16 +920,6 @@ def stats_aggregate(spark: SparkSession, path: str,
     return spark.createDataFrame(
         [tuple(row[f.name] for f in out_fields)],
         T.StructType(out_fields))
-
-
-def _root_blooms(path: str, manifest: dict) -> dict:
-    """A snapshot's per-file blooms re-keyed TABLE-ROOT-relative
-    (mirrors :func:`_root_stats`)."""
-    blooms = load_file_blooms(manifest) or {}
-    if manifest.get("data_files") is not None:
-        return dict(blooms)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in blooms.items()}
 
 
 def _dv_dir(path: str, version: int) -> str:
@@ -990,18 +996,15 @@ def write_versioned(df: DataFrame, path: str,
                     partition_by: list[str] | None = None,
                     changes_df: DataFrame | None = None,
                     reuse_files: list[str] | None = None,
-                    reuse_stats: dict | None = None,
                     bloom_cols: list[str] | None = None,
                     bloom_bits: int | None = None,
                     bloom_hashes: int | None = None,
-                    reuse_blooms: dict | None = None,
                     dv_df: DataFrame | None = None,
                     dv_key: str | None = None,
                     dv_dirs: list[int] | None = None,
                     ndv_cols: list[str] | None = None,
-                    reuse_ndv: dict | None = None,
                     hdr_cols: list[str] | None = None,
-                    reuse_hdr: dict | None = None,
+                    _carry_from: dict | None = None,
                     _no_data: bool = False) -> int:
     """Commit ``df`` as the next snapshot; returns the new version.
 
@@ -1011,13 +1014,6 @@ def write_versioned(df: DataFrame, path: str,
     (compare-and-set on the table head — the Delta/Iceberg commit
     contract).  ``None`` skips the check (blind append of a whole
     snapshot).
-
-    ``stats_cols`` records per-FILE min/max for those columns in the
-    manifest (read from parquet footers — zero extra jobs), enabling
-    :func:`read_version`'s ``where=`` file skipping.  Cluster the
-    data on the column first (``repartitionByRange(col)`` or a
-    Z-order sort) or every file spans the full range and nothing
-    prunes.
 
     ``partition_by`` writes the snapshot Hive-partitioned (the
     date/tenant layout a 100 TB table wants): readers restore the
@@ -1048,37 +1044,43 @@ def write_versioned(df: DataFrame, path: str,
     file_reuse=True)`` touch a 0.1% slice of a 100 TB table without
     rewriting the other 99.9%.  Only FLAT layouts (no
     ``partition_by``) can reuse; :func:`vacuum_versioned` reference-
-    counts files across retained versions.  ``reuse_stats`` carries
-    the reused files' min/max entries forward (same keys) so
-    ``stats_cols`` skipping stays armed without re-reading their
-    footers.
+    counts files across retained versions.
 
-    ``bloom_cols`` arms POINT-LOOKUP file skipping (Delta bloom
-    filter indexes): per-file Bloom bitmaps (``bloom_bits`` bits,
-    ``bloom_hashes`` md5-convention hashes) land in a lazy sidecar,
-    and ``read_version(where=(col, v, v))`` probes them at planning
-    time — a key lookup on a column the layout is NOT clustered on
-    skips files min/max can't.  Costs one bounded job per column over
-    the NEW files.  Bloom config is a TABLE PROPERTY: later commits
-    INHERIT it from the parent manifest automatically (pass
-    ``bloom_cols=[]`` to disarm), file-reuse commits carry the
-    parent's bitmaps for carried files (``reuse_blooms`` overrides —
-    the restore/clone path), and partition columns are rejected
-    (their ``col=value`` path prunes via ``stats_cols`` for free).
-    Size ``bloom_bits`` ≈ 10× the rows per file for ~1% false
-    positives at 4 hashes; false positives only cost a read, never
-    correctness.
+    PER-FILE SIDECARS — one contract for every kind, each a lazy
+    ``_manifests/{version}.{kind}.json`` the manifest references (it
+    stays O(1) in file count; only readers that use a kind parse it):
 
-    ``ndv_cols`` records per-file HyperLogLog REGISTERS (256-bucket
-    md5 sketch, the engine's ``sketch.hll_table`` convention) in a
-    lazy sidecar — Iceberg Puffin's shape: register max-merge across
-    files IS the whole-table sketch, so
-    ``stats_aggregate(('approx_ndv', col, ...))`` answers
-    distinct-count questions from metadata alone.  Config is a table
-    property like blooms (inherits from the parent;
-    ``ndv_cols=[]`` disarms); file-reuse commits carry register
-    entries for carried files (``reuse_ndv`` overrides); costs one
-    bounded job per column over the NEW files.
+    - ``stats_cols``: min/max, row and null counts from parquet
+      footers (zero jobs up to :data:`_STATS_DRIVER_MAX` files) — arms
+      :func:`read_version`'s ``where=`` range skipping and
+      :func:`stats_aggregate`'s COUNT/MIN/MAX.  Cluster the data on
+      the column first (``repartitionByRange`` or a Z-order sort) or
+      every file spans the full range and nothing prunes.
+    - ``bloom_cols``: POINT-LOOKUP skipping (Delta bloom filter
+      indexes) — ``bloom_bits``-bit, ``bloom_hashes``-hash
+      md5-convention bitmaps probed at planning time by
+      ``read_version(where=(col, v, v))``.  Size ``bloom_bits`` ≈ 10×
+      the rows per file for ~1% false positives at 4 hashes (false
+      positives only cost a read).  Partition columns and types whose
+      Spark string cast differs from the Python probe are rejected.
+    - ``ndv_cols``: per-file HyperLogLog registers (Iceberg Puffin's
+      shape, ``sketch.hll_table`` convention) —
+      ``stats_aggregate('approx_ndv')`` from metadata.
+    - ``hdr_cols``: per-file HDR histogram buckets over POSITIVE
+      integers (``sketch.hdr_table`` convention; a non-positive value
+      fails the commit) — ``stats_aggregate('approx_quantile')``.
+
+    The bloom, NDV and HDR columns of a commit build together in ONE
+    bounded scan of the NEW files, however many are armed.  Their
+    config is a TABLE PROPERTY: a commit that passes ``None``
+    inherits it from the parent manifest (``[]`` disarms); stats
+    columns are per commit.  A FILE-REUSE commit carries each kind's
+    entries for the carried files from the parent manifest when the
+    kind's config is unchanged (otherwise they record unknown — kept,
+    never pruned).  ``_carry_from`` (a manifest read by
+    :func:`_read_manifest`, possibly another table's) replaces the
+    parent as the source of both the inherited config and the carried
+    entries — the restore/clone path.
 
     DELETE VECTORS (merge-on-read): ``dv_df`` — a ``(_file string,
     <dv_key>)`` frame of per-file deleted keys — is written as this
@@ -1091,6 +1093,8 @@ def write_versioned(df: DataFrame, path: str,
     contain the deleted rows — dropping the vectors would resurrect
     them) while full rewrites reset (``df`` comes from a DV-applied
     read, so the new files hold only live rows)."""
+    from pyspark import inheritable_thread_target
+
     if reuse_files and partition_by:
         raise ValueError(
             "write_versioned: file-reuse commits require a flat "
@@ -1101,6 +1105,31 @@ def write_versioned(df: DataFrame, path: str,
         raise ConcurrentWriteError(
             f"table {path!r} moved: expected parent {expected_parent}, "
             f"found {parent} — re-read and retry")
+    pm: dict = {}
+    if parent is not None:
+        try:
+            pm = _read_manifest(path, parent)
+        except ValueError:
+            pass
+    src = pm if _carry_from is None else _carry_from
+    given = {"stats": (stats_cols, {}),
+             "bloom": (bloom_cols, {"bloom_bits": bloom_bits,
+                                    "bloom_hashes": bloom_hashes}),
+             "ndv": (ndv_cols, {}), "hdr": (hdr_cols, {})}
+    armed: list[tuple[_Sidecar, dict]] = []
+    for spec in _SIDECARS:
+        cols, sizing = given[spec.kind]
+        inherit = cols is None and spec.table_property
+        if inherit:
+            cols = src.get(f"{spec.kind}_cols")
+        if not cols:
+            continue
+        cfg = {f"{spec.kind}_cols": list(cols), **{
+            k: sizing.get(k) or (src.get(k) if inherit else None) or d
+            for k, d in spec.sizing.items()}}
+        if spec.check is not None:
+            spec.check(cfg, df.schema, partition_by)
+        armed.append((spec, cfg))
     # next version clears BOTH the head and any manifested-but-never-
     # flipped snapshot (a writer that crashed between manifest and
     # pointer flip must not block its number forever)
@@ -1117,7 +1146,11 @@ def write_versioned(df: DataFrame, path: str,
         # sequentially).  Each write is its own output directory; the
         # manifest (the atomic commit point) is written only after
         # every future joins, so crash semantics are unchanged —
-        # nothing is visible until the head flip.
+        # nothing is visible until the head flip.  Each target is
+        # wrapped on its own, so it runs on its own copy of this
+        # thread's Spark local properties: its jobs stay in the
+        # caller's job group, and the two writes' SQL executions never
+        # share one properties object.
         _cfut = _dfut = None
         if dv_df is not None:
             # validate BEFORE the async write starts (fail-fast
@@ -1133,13 +1166,15 @@ def write_versioned(df: DataFrame, path: str,
         if changes_df is not None or dv_df is not None:
             _pool = ThreadPoolExecutor(max_workers=2)
             if changes_df is not None:
-                _cfut = _pool.submit(
+                _cfut = _pool.submit(inheritable_thread_target(
+                    df.sparkSession)(
                     lambda: changes_df.write.mode("overwrite").parquet(
-                        _changes_dir(path, version)))
+                        _changes_dir(path, version))))
             if dv_df is not None:
-                _dfut = _pool.submit(
+                _dfut = _pool.submit(inheritable_thread_target(
+                    df.sparkSession)(
                     lambda: dv_df.write.mode("overwrite").parquet(
-                        _dv_dir(path, version)))
+                        _dv_dir(path, version))))
         if _no_data:
             # The caller declares ``df`` statically EMPTY (a MOR
             # delete / no-change update whose rewrite set has no
@@ -1158,10 +1193,9 @@ def write_versioned(df: DataFrame, path: str,
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(snap)
             new_files = _data_files(snap)
+        new_keys = [f"snap/v={version}/{f}" for f in new_files]
         if reuse_files is not None:
-            data_files = sorted(
-                [f"snap/v={version}/{f}" for f in new_files]
-                + list(reuse_files))
+            data_files = sorted(new_keys + list(reuse_files))
             n_files = len(data_files)
         else:
             data_files = None
@@ -1189,167 +1223,59 @@ def write_versioned(df: DataFrame, path: str,
             _cfut.result()               # join the overlapped write
             manifest["changes"] = True
             manifest["changes_schema_json"] = changes_df.schema.json()
-        if stats_cols:
-            # Stats live in a SIDECAR referenced by the manifest, not
-            # inlined: the manifest stays O(1) no matter the file
-            # count, and readers that never pass ``where=`` never pay
-            # the O(files) parse (prune_files loads it lazily).
-            stats = _file_stats(snap, stats_cols,
-                                tuple(partition_by or ()),
-                                schema=df.schema, spark=df.sparkSession)
-            if reuse_files is not None:
-                # file-reuse commits key stats TABLE-ROOT-relative so
-                # one sidecar spans snapshot directories; carried
-                # files keep their parent entries (no footer re-read),
-                # unknown when absent (kept, never pruned)
-                stats = {f"snap/v={version}/{k}": v
-                         for k, v in stats.items()}
-                for f in reuse_files:
-                    stats[f] = (reuse_stats or {}).get(
-                        f, {c: None for c in stats_cols})
-            sidecar = f"{version}.stats.json"
-            stmp = os.path.join(_manifest_dir(path), sidecar + ".tmp")
-            with open(stmp, "w") as fh:
-                json.dump(stats, fh)
-            os.replace(stmp, os.path.join(_manifest_dir(path), sidecar))
-            manifest["stats_file"] = sidecar
-            manifest["stats_cols"] = list(stats_cols)
-        # Bloom config inherits from the parent manifest (a table
-        # property, like Delta's index config) unless the caller sets
-        # it — bloom_cols=[] explicitly disarms.
-        if bloom_cols is None and parent is not None:
-            try:
-                pm = _read_manifest(path, parent)
-            except ValueError:
-                pm = {}
-            bloom_cols = pm.get("bloom_cols")
-            bloom_bits = bloom_bits or pm.get("bloom_bits")
-            bloom_hashes = bloom_hashes or pm.get("bloom_hashes")
-            if reuse_files is not None and reuse_blooms is None \
-                    and bloom_cols:
-                reuse_blooms = _root_blooms(path, pm)
-        if bloom_cols:
-            bad = [c for c in bloom_cols if c in (partition_by or ())]
-            if bad:
-                raise ValueError(
-                    f"write_versioned: bloom_cols {bad} are partition "
-                    "columns — their col=value path already prunes "
-                    "via stats_cols")
-            types = {f.name: f.dataType.typeName() for f in df.schema}
-            badtype = [(c, types.get(c)) for c in bloom_cols
-                       if types.get(c) not in _BLOOM_TYPES]
-            if badtype:
-                raise ValueError(
-                    f"write_versioned: bloom_cols {badtype} have types "
-                    "whose Spark string cast differs from the Python "
-                    "probe rendering (double '1e+20' vs '1.0E20', "
-                    "boolean 'True' vs 'true', ...) — membership would "
-                    "silently miss and point reads would DROP matching "
-                    f"files.  Supported types: {_BLOOM_TYPES}")
-            bloom_bits = bloom_bits or _BLOOM_DEFAULT_BITS
-            bloom_hashes = bloom_hashes or _BLOOM_DEFAULT_HASHES
-            if reuse_files is not None:
-                new_keys = [f"snap/v={version}/{f}" for f in new_files]
-                blooms = _file_blooms(path, new_keys, list(bloom_cols),
-                                      bloom_bits, bloom_hashes,
-                                      df.schema, df.sparkSession)
-                for f in reuse_files:
-                    blooms[f] = (reuse_blooms or {}).get(
-                        f, {c: None for c in bloom_cols})
+        # --- per-file sidecars: build, carry, write ------------------
+        scan = [(spec, c, cfg) for spec, cfg in armed if spec.build
+                for c in cfg[f"{spec.kind}_cols"]]
+        built = (_scan_sidecars(path, new_keys, scan, df.schema,
+                                df.sparkSession) if scan and new_keys
+                 else {})
+        src_root = os.path.abspath(os.path.dirname(
+            src.get("_manifest_dir") or _manifest_dir(path)))
+        dst_root = os.path.abspath(path)
+        for spec, cfg in armed:
+            cols = cfg[f"{spec.kind}_cols"]
+            if spec.build is None:
+                entries = {f"snap/v={version}/{k}": e for k, e in
+                           _file_stats(snap, cols,
+                                       tuple(partition_by or ()),
+                                       schema=df.schema,
+                                       spark=df.sparkSession).items()}
             else:
-                blooms = _file_blooms(snap, new_files, list(bloom_cols),
-                                      bloom_bits, bloom_hashes,
-                                      df.schema, df.sparkSession)
-            bsidecar = f"{version}.bloom.json"
-            btmp = os.path.join(_manifest_dir(path), bsidecar + ".tmp")
-            with open(btmp, "w") as fh:
-                json.dump(blooms, fh)
-            os.replace(btmp,
-                       os.path.join(_manifest_dir(path), bsidecar))
-            manifest["bloom_file"] = bsidecar
-            manifest["bloom_cols"] = list(bloom_cols)
-            manifest["bloom_bits"] = bloom_bits
-            manifest["bloom_hashes"] = bloom_hashes
-        # NDV config inherits from the parent manifest like blooms
-        # (ndv_cols=[] explicitly disarms).
-        if ndv_cols is None and parent is not None:
-            try:
-                pm_ndv = _read_manifest(path, parent)
-            except ValueError:
-                pm_ndv = {}
-            ndv_cols = pm_ndv.get("ndv_cols")
-            if reuse_files is not None and reuse_ndv is None \
-                    and ndv_cols:
-                reuse_ndv = _root_ndv(path, pm_ndv)
-        if ndv_cols:
+                entries = {f: {c: built[spec.kind, c][f] for c in cols}
+                           for f in new_keys}
             if reuse_files is not None:
-                new_keys = [f"snap/v={version}/{f}" for f in new_files]
-                ndv = _file_ndv(path, new_keys, list(ndv_cols),
-                                df.schema, df.sparkSession)
+                same = all((src.get(k) or spec.sizing.get(k)) == v
+                           for k, v in cfg.items())
+                carried = _root_sidecar(src, spec.kind) if same else {}
+                if src_root != dst_root:         # a clone's source
+                    carried = {os.path.relpath(
+                        os.path.join(src_root, k), dst_root)
+                        .replace(os.sep, "/"): e
+                        for k, e in carried.items()}
                 for f in reuse_files:
-                    ndv[f] = (reuse_ndv or {}).get(
-                        f, {c: None for c in ndv_cols})
+                    entries[f] = carried.get(f, {c: None for c in cols})
             else:
-                nk = [f"snap/v={version}/{f}" for f in new_files]
-                ndv = {k.split("/", 2)[-1]: v for k, v in _file_ndv(
-                    path, nk, list(ndv_cols), df.schema,
-                    df.sparkSession).items()}
-            nsidecar = f"{version}.ndv.json"
-            ntmp = os.path.join(_manifest_dir(path), nsidecar + ".tmp")
-            with open(ntmp, "w") as fh:
-                json.dump(ndv, fh)
-            os.replace(ntmp,
-                       os.path.join(_manifest_dir(path), nsidecar))
-            manifest["ndv_file"] = nsidecar
-            manifest["ndv_cols"] = list(ndv_cols)
-        # HDR histogram sidecars (per-file quantile buckets) — the
-        # third mergeable sketch beside stats ranges and NDV
-        # registers; same inheritance/carry contract.
-        if hdr_cols is None and parent is not None:
-            try:
-                pm_hdr = _read_manifest(path, parent)
-            except ValueError:
-                pm_hdr = {}
-            hdr_cols = pm_hdr.get("hdr_cols")
-            if reuse_files is not None and reuse_hdr is None \
-                    and hdr_cols:
-                reuse_hdr = _root_hdr(path, pm_hdr)
-        if hdr_cols:
-            if reuse_files is not None:
-                new_keys = [f"snap/v={version}/{f}" for f in new_files]
-                hdr = _file_hdr(path, new_keys, list(hdr_cols),
-                                df.schema, df.sparkSession)
-                for f in reuse_files:
-                    hdr[f] = (reuse_hdr or {}).get(
-                        f, {c: None for c in hdr_cols})
-            else:
-                nk = [f"snap/v={version}/{f}" for f in new_files]
-                hdr = {k.split("/", 2)[-1]: v for k, v in _file_hdr(
-                    path, nk, list(hdr_cols), df.schema,
-                    df.sparkSession).items()}
-            hsc = f"{version}.hdr.json"
-            htmp = os.path.join(_manifest_dir(path), hsc + ".tmp")
-            with open(htmp, "w") as fh:
-                json.dump(hdr, fh)
-            os.replace(htmp, os.path.join(_manifest_dir(path), hsc))
-            manifest["hdr_file"] = hsc
-            manifest["hdr_cols"] = list(hdr_cols)
+                # full snapshots key their sidecars snapshot-relative
+                entries = {k.split("/", 2)[-1]: e
+                           for k, e in entries.items()}
+            name = f"{version}.{spec.kind}.json"
+            tmp = os.path.join(_manifest_dir(path), name + ".tmp")
+            with open(tmp, "w") as fh:
+                json.dump(entries, fh)
+            os.replace(tmp, os.path.join(_manifest_dir(path), name))
+            manifest[f"{spec.kind}_file"] = name
+            manifest.update(cfg)
         # --- delete vectors (merge-on-read) --------------------------
-        if dv_dirs is None and reuse_files is not None \
-                and parent is not None:
-            try:
-                pm_dv = _read_manifest(path, parent)
-            except ValueError:
-                pm_dv = {}
-            dv_dirs = pm_dv.get("dv_dirs")
+        if dv_dirs is None and reuse_files is not None:
+            dv_dirs = pm.get("dv_dirs")
             if dv_dirs:
                 if dv_key is None:
-                    dv_key = pm_dv.get("dv_key")
-                elif dv_key != pm_dv.get("dv_key"):
+                    dv_key = pm.get("dv_key")
+                elif dv_key != pm.get("dv_key"):
                     raise ValueError(
                         "write_versioned: dv_key "
                         f"{dv_key!r} differs from the table's live "
-                        f"delete-vector key {pm_dv.get('dv_key')!r} — "
+                        f"delete-vector key {pm.get('dv_key')!r} — "
                         "one key per table (fold the existing vectors "
                         "with optimize_versioned first)")
         if dv_df is not None:
@@ -1417,17 +1343,7 @@ def load_file_stats(manifest: dict) -> dict | None:
     pay the O(files) parse.  Inline ``file_stats`` (pre-sidecar
     manifests, hand-built dicts) still work.  None when the snapshot
     recorded no stats or the sidecar is gone."""
-    stats = manifest.get("file_stats")
-    if stats is None and manifest.get("stats_file") \
-            and manifest.get("_manifest_dir"):
-        try:
-            with open(os.path.join(manifest["_manifest_dir"],
-                                   manifest["stats_file"])) as fh:
-                stats = json.load(fh)
-        except FileNotFoundError:
-            return None                     # sidecar gone: no pruning
-        manifest["file_stats"] = stats      # cache for repeat calls
-    return stats
+    return _load_sidecar(manifest, "stats")
 
 
 def prune_files(manifest: dict, where) -> list | None:
@@ -1825,7 +1741,6 @@ def _merge_commit(spark, path, key, m, base, aligned, parent_detect,
                                          "merge_mode": "mor"},
                 changes_df=changes, stats_cols=m.get("stats_cols"),
                 reuse_files=_root_files(path, m),
-                reuse_stats=_root_stats(path, m),
                 dv_df=dv_df, dv_key=key)
         finally:
             sel.unpersist()
@@ -1868,7 +1783,7 @@ def _merge_commit(spark, path, key, m, base, aligned, parent_detect,
             merged, path, expected_parent=expected_parent, _op="merge",
             extra_meta=extra_meta, changes_df=changes,
             stats_cols=m.get("stats_cols"),
-            reuse_files=untouched, reuse_stats=_root_stats(path, m))
+            reuse_files=untouched)
     changes = _merge_changes(base, aligned, key,
                              detect_cols=parent_detect,
                              broadcast_batch=broadcast_batch) \
@@ -1893,16 +1808,6 @@ def _root_files(path: str, manifest: dict) -> list[str]:
         return list(manifest["data_files"])
     v = manifest["version"]
     return [f"snap/v={v}/{f}" for f in _data_files(_snap_dir(path, v))]
-
-
-def _root_stats(path: str, manifest: dict) -> dict:
-    """A snapshot's per-file stats re-keyed TABLE-ROOT-relative (the
-    file-reuse sidecar keying), empty when none recorded."""
-    stats = load_file_stats(manifest) or {}
-    if manifest.get("data_files") is not None:
-        return dict(stats)
-    v = manifest["version"]
-    return {f"snap/v={v}/{k}": s for k, s in stats.items()}
 
 
 def _rel_uri(path: str, uri: str) -> str:
@@ -2016,7 +1921,6 @@ def delete_where(spark: SparkSession, path: str, condition,
                 extra_meta={"delete_mode": "mor"},
                 stats_cols=stats_cols, changes_df=changes,
                 reuse_files=parent_files,
-                reuse_stats=_root_stats(path, m),
                 dv_df=dv_df, dv_key=key, _no_data=True)
         finally:
             hits.unpersist()
@@ -2058,8 +1962,7 @@ def delete_where(spark: SparkSession, path: str, condition,
     version = write_versioned(
         replacement, path, expected_parent=expected_parent,
         _op="delete", stats_cols=stats_cols, changes_df=changes,
-        reuse_files=untouched, reuse_stats=_root_stats(path, m),
-        _no_data=not touched)
+        reuse_files=untouched, _no_data=not touched)
     return {"version": version, "n_deleted": int(n_deleted),
             "files_rewritten": len(touched),
             "files_reused": len(untouched)}
@@ -2223,7 +2126,6 @@ def update_where(spark: SparkSession, path: str, condition,
                 stats_cols=m.get("stats_cols"),
                 changes_df=changes_of(hits.drop("_f", "_chg")),
                 reuse_files=_root_files(path, m),
-                reuse_stats=_root_stats(path, m),
                 dv_df=dv_df, dv_key=key,
                 _no_data=not n_changed)
         finally:
@@ -2276,7 +2178,7 @@ def update_where(spark: SparkSession, path: str, condition,
         replacement, path, expected_parent=expected_parent,
         _op="update", stats_cols=m.get("stats_cols"),
         changes_df=changes, reuse_files=untouched,
-        reuse_stats=_root_stats(path, m), _no_data=not touched)
+        _no_data=not touched)
     return {"version": version, "n_updated": int(n_updated),
             "n_changed": int(n_changed),
             "files_rewritten": len(touched),
@@ -2370,9 +2272,7 @@ def restore_version(spark: SparkSession, path: str, version: int,
             df, path, expected_parent=expected_parent, _op="restore",
             extra_meta=meta, stats_cols=m_old.get("stats_cols"),
             partition_by=m_old["partition_by"], changes_df=changes,
-            bloom_cols=m_old.get("bloom_cols") or [],
-            bloom_bits=m_old.get("bloom_bits"),
-            bloom_hashes=m_old.get("bloom_hashes"))
+            _carry_from=m_old)
         return {"version": new_v, "restored_from": version,
                 "files_reused": 0, "files_rewritten": m_old["n_files"]}
     files = _root_files(path, m_old)
@@ -2397,21 +2297,16 @@ def restore_version(spark: SparkSession, path: str, version: int,
             "retained versions can be restored")
     schema = T.StructType.fromJson(json.loads(m_old["schema_json"]))
     empty = spark.createDataFrame([], schema)
-    # Bloom config travels WITH the carried bitmaps: write_versioned
-    # would otherwise inherit bloom_bits/bloom_hashes from the current
-    # HEAD's manifest, and bitmaps built under m_old's sizing probed
-    # with HEAD's parameters yield silent false negatives (r10
-    # ADVICE).  m_old without blooms restores the no-bloom state
-    # ([] disarms — RESTORE restores table properties too).
+    # Sidecar config travels WITH the carried entries (_carry_from):
+    # inheriting the current HEAD's config instead would probe bitmaps
+    # built under m_old's sizing with HEAD's parameters — silent false
+    # negatives (r10 ADVICE) — and drop sketches HEAD disarmed.  m_old
+    # without a kind restores it disarmed (RESTORE restores table
+    # properties too).
     new_v = write_versioned(
         empty, path, expected_parent=expected_parent, _op="restore",
         extra_meta=meta, stats_cols=m_old.get("stats_cols"),
-        changes_df=changes, reuse_files=files,
-        reuse_stats=_root_stats(path, m_old),
-        reuse_blooms=_root_blooms(path, m_old),
-        bloom_cols=m_old.get("bloom_cols") or [],
-        bloom_bits=m_old.get("bloom_bits"),
-        bloom_hashes=m_old.get("bloom_hashes"),
+        changes_df=changes, reuse_files=files, _carry_from=m_old,
         # the restored CONTENT includes m_old's delete vectors —
         # inheriting the current head's list instead would apply
         # post-restore deletes to the restored state ([] resets when
@@ -2470,10 +2365,7 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
         v = write_versioned(
             df, dst, _op="clone", extra_meta=meta,
             stats_cols=m.get("stats_cols"),
-            partition_by=m["partition_by"],
-            bloom_cols=m.get("bloom_cols"),
-            bloom_bits=m.get("bloom_bits"),
-            bloom_hashes=m.get("bloom_hashes"))
+            partition_by=m["partition_by"], _carry_from=m)
         return {"version": v, "source_path": src_abs,
                 "source_version": version, "files_referenced": 0,
                 "files_rewritten": m["n_files"]}
@@ -2489,11 +2381,6 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
     dst_abs = os.path.abspath(dst)
     refs = [os.path.relpath(os.path.join(src_abs, f), dst_abs)
             .replace(os.sep, "/") for f in files]
-    def rekey(d: dict) -> dict:
-        return {os.path.relpath(os.path.join(src_abs, k), dst_abs)
-                .replace(os.sep, "/"): v for k, v in d.items()}
-
-    reuse_stats = rekey(_root_stats(src, m))
     schema = T.StructType.fromJson(json.loads(m["schema_json"]))
     empty = spark.createDataFrame([], schema)
     # Delete vectors are REWRITTEN into the clone's own tree (one
@@ -2517,12 +2404,8 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
     v = write_versioned(
         empty, dst, _op="clone", extra_meta=meta,
         stats_cols=m.get("stats_cols"),
-        reuse_files=refs, reuse_stats=reuse_stats,
-        bloom_cols=m.get("bloom_cols"),
-        bloom_bits=m.get("bloom_bits"),
-        bloom_hashes=m.get("bloom_hashes"),
-        reuse_blooms=rekey(_root_blooms(src, m)),
-        dv_df=dv_df, dv_key=dv_key, _no_data=True)
+        reuse_files=refs, _carry_from=m, dv_df=dv_df, dv_key=dv_key,
+        _no_data=True)
     return {"version": v, "source_path": src_abs,
             "source_version": version, "files_referenced": len(refs),
             "files_rewritten": 0}
@@ -2533,13 +2416,14 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
     every committed manifest and validate the invariants readers
     depend on — referenced data files exist and match ``n_files``,
     parent links chain back without cycles, the head pointer lands on
-    a committed manifest, stats/bloom sidecars parse and key only
-    referenced files, delete-vector dirs exist with their key in the
-    snapshot schema, change dirs exist where the manifest claims
-    them, and crashed-writer leftovers (orphan claims, snap dirs with
-    no manifest) are reported.  Pure driver metadata reads — no
-    Spark session, no data pages; run it before/after vacuum or as a
-    governance cadence job.
+    a committed manifest, every sidecar kind parses, keys only
+    referenced files and carries its sizing config, delete-vector
+    dirs exist with their key in the snapshot schema, change dirs
+    exist where the manifest claims them, and crashed-writer
+    leftovers (orphan claims, snap dirs with no manifest) are
+    reported.  Pure driver metadata reads — no Spark session, no data
+    pages; run it before/after vacuum or as a governance cadence
+    job.
 
     Returns the issue list (empty = healthy); VACUUMED history is
     reported as ``note:`` lines (expected state), real corruption as
@@ -2579,30 +2463,24 @@ def verify_versioned(path: str, strict: bool = False) -> list[str]:
                 f"{kind}: version {v} directory holds {len(files)} "
                 f"files, manifest says {m['n_files']} "
                 f"({m['n_files'] - len(files)} missing)")
-        try:
-            st = load_file_stats(m)
-        except Exception as e:              # malformed sidecar
-            issues.append(f"error: version {v} stats sidecar "
-                          f"unreadable: {e}")
-            st = None
-        if st:
-            rst = _root_stats(path, m)
-            extra = set(rst) - set(files)
+        for spec in _SIDECARS:
+            try:
+                entries = _root_sidecar(m, spec.kind)
+            except Exception as e:          # malformed sidecar
+                issues.append(f"error: version {v} {spec.kind} sidecar "
+                              f"unreadable: {e}")
+                continue
+            extra = set(entries) - set(files)
             if extra:
                 issues.append(
-                    f"error: version {v} stats key {sorted(extra)[:3]}"
-                    " not in the snapshot's file list")
-        try:
-            bl = load_file_blooms(m)
-        except Exception as e:
-            issues.append(f"error: version {v} bloom sidecar "
-                          f"unreadable: {e}")
-            bl = None
-        if bl is not None and m.get("bloom_cols"):
-            if not m.get("bloom_bits") or not m.get("bloom_hashes"):
+                    f"error: version {v} {spec.kind} key "
+                    f"{sorted(extra)[:3]} not in the snapshot's file "
+                    "list")
+            if m.get(f"{spec.kind}_cols") and \
+                    not all(m.get(k) for k in spec.sizing):
                 issues.append(
-                    f"error: version {v} has bloom_cols but no "
-                    "bloom_bits/bloom_hashes")
+                    f"error: version {v} has {spec.kind}_cols but no "
+                    + "/".join(spec.sizing))
         for dvv in (m.get("dv_dirs") or []):
             if not os.path.isdir(_dv_dir(path, dvv)):
                 kind = "note" if v != head else "error"
@@ -3284,14 +3162,12 @@ def optimize_versioned(spark: SparkSession, path: str,
                 .where(F.col("_file").isin(big)))
             if live.limit(1).count():
                 dv_df = live
-        stats = _root_stats(path, m)
         return write_versioned(
             packed, path, expected_parent=head, _op="optimize",
             extra_meta={"compacted": len(small), "carried": len(big)},
             stats_cols=stats_cols if stats_cols is not None
             else m.get("stats_cols"),
             reuse_files=big,
-            reuse_stats={f: stats[f] for f in big if f in stats},
             dv_df=dv_df, dv_key=dv_key, dv_dirs=dv_dirs_override)
     df = read_version(spark, path, head)
     if zorder:

@@ -2304,7 +2304,7 @@ class TestStatsAggregate:
     def test_where_full_containment_only(self, spark, tmp_path):
         import pytest
         t = self._mk(spark, tmp_path)
-        st = V._root_stats(t, V._read_manifest(t, 1))
+        st = V._root_sidecar(V._read_manifest(t, 1), "stats")
         lo, hi = st[sorted(st)[0]]["k"]
         [r] = V.stats_aggregate(spark, t, [("count", None, "n")],
                                 where=("k", lo, hi)).collect()
@@ -2486,6 +2486,102 @@ class TestHdrSidecars:
         with pytest.raises(Exception, match="non-positive"):
             V.write_versioned(df, str(tmp_path / "t"),
                               hdr_cols=["v"])
+
+
+class TestSidecarSpec:
+    """One sidecar path for every kind: restore/clone carry NDV and
+    HDR with their config, verify checks every kind, the sidecar
+    build is one scan however many columns are armed, and side-write
+    jobs stay in the caller's job group."""
+
+    @staticmethod
+    def _sketches(spark, path):
+        [ndv] = V.stats_aggregate(
+            spark, path, [("approx_ndv", "c", "nc")]).collect()
+        [q] = V.stats_aggregate(spark, path, [
+            ("approx_quantile", ("v", 1, 2), "p50"),
+            ("approx_quantile", ("v", 9, 10), "p90")]).collect()
+        return ndv["nc"], q["p50"], q["p90"]
+
+    def _df(self, spark, n=4000):
+        # v has NULLs: the shared projection must skip them before the
+        # HDR hook's non-positive guard
+        return spark.range(0, n, numPartitions=4).select(
+            F.col("id").alias("k"), (F.col("id") % 37).alias("c"),
+            F.when(F.col("id") % 50 == 0, None)
+            .otherwise(F.col("id") % 997 + 1).alias("v"))
+
+    def test_clone_and_restore_carry_ndv_and_hdr(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        V.write_versioned(self._df(spark), t, ndv_cols=["c"],
+                          hdr_cols=["v"])
+        src = self._sketches(spark, t)
+        dst = str(tmp_path / "dst")
+        V.clone_versioned(spark, t, dst)
+        assert self._sketches(spark, dst) == src
+        # a later commit disarms both; restoring v1 re-arms them
+        V.write_versioned(self._df(spark, 100), t, ndv_cols=[],
+                          hdr_cols=[])
+        V.restore_version(spark, t, 1)
+        assert self._sketches(spark, t) == src
+        assert V.verify_versioned(dst, strict=True) == []
+        assert V.verify_versioned(t, strict=True) == []
+
+    def test_verify_flags_tampered_ndv_and_hdr_keys(self, spark,
+                                                    tmp_path):
+        import json
+
+        for kind in ("ndv", "hdr"):
+            t = str(tmp_path / kind)
+            V.write_versioned(self._df(spark), t, ndv_cols=["c"],
+                              hdr_cols=["v"])
+            assert V.verify_versioned(t, strict=True) == []
+            sidecar = os.path.join(V._manifest_dir(t), f"1.{kind}.json")
+            with open(sidecar) as fh:
+                entries = json.load(fh)
+            first = sorted(entries)[0]
+            entries["part-bogus.parquet"] = entries.pop(first)
+            with open(sidecar, "w") as fh:
+                json.dump(entries, fh)
+            with pytest.raises(ValueError, match=f"{kind} key"):
+                V.verify_versioned(t, strict=True)
+
+    def _commit_jobs(self, spark, path, **sidecars) -> int:
+        sc = spark.sparkContext
+        group = f"sidecar-budget-{os.path.basename(path)}"
+        sc.setJobGroup(group, "sidecar job budget")
+        try:
+            V.write_versioned(self._df(spark), path, **sidecars)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_sidecar_jobs_do_not_grow_with_armed_columns(self, spark,
+                                                         tmp_path):
+        one = self._commit_jobs(spark, str(tmp_path / "one"),
+                                bloom_cols=["k"])
+        four = self._commit_jobs(spark, str(tmp_path / "four"),
+                                 bloom_cols=["k"], ndv_cols=["c", "k"],
+                                 hdr_cols=["v"])
+        assert four == one
+
+    def test_side_writes_keep_the_job_group(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        V.write_versioned(self._df(spark), t)
+        sc = spark.sparkContext
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        sc.setJobGroup("side-writes", "side-write attribution")
+        try:
+            V.delete_where(spark, t, F.col("k") < 5, mode="mor", key="k",
+                           store_changes_key="k")
+            V.merge_versioned(spark, t, spark.createDataFrame(
+                [(7, 1, 1), (90000, 2, 2)], "k bigint, c bigint, v bigint"),
+                "k", store_changes=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("side-writes")
+        grown = set(sc.statusTracker().getJobIdsForGroup(None)) - before
+        assert grown == set()
 
 
 class TestMaintainScd2:
