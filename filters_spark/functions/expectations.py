@@ -173,27 +173,41 @@ def expect_distribution(df: DataFrame, col: str,
     Category matching is canonicalized ONE way: the observed group
     key and the expected keys are both Spark's own ``cast('string')``
     of the NATIVE value (the expected dict keys ride into a tiny
-    frame typed as given and Spark casts them) — so bool/decimal
+    local frame typed as given and Spark casts them) — so bool
     columns, where Python's ``str()`` disagrees with Spark's cast
-    ('True' vs 'true'), match instead of double-counting.
+    ('True' vs 'true'), match instead of double-counting.  The keys
+    share one plain type (bool, int, float, str or date; None is a
+    NULL key); anything else raises ``TypeError``.
 
     Scale shape: a grouped count (map-side combine), a broadcast
     full-outer join against the |expected| + observed-categories
     keys, and two PLAIN aggregates — no global-partition window, so
     a high-cardinality column degrades to an ordinary aggregate
     instead of funneling every distinct category through one task."""
+    import datetime
+
+    from ..sources.tables import local_frame
+
     n = name or f"distribution({col})"
     spark = df.sparkSession
     tol_micro = int(round(tolerance * 1_000_000))
     exp_rows = [(k, int(round(v * 1_000_000)))
                 for k, v in sorted(expected_shares.items(),
                                    key=lambda kv: str(kv[0]))]
-    if exp_rows:
-        exp_df = (spark.createDataFrame(exp_rows, ["_cat_native", "_p"])
-                  .select(F.col("_cat_native").cast("string").alias("_cat"),
-                          F.col("_p").cast("bigint").alias("_p")))
-    else:
-        exp_df = spark.createDataFrame([], "_cat string, _p bigint")
+    key_types = {bool: "boolean", int: "bigint", float: "double",
+                 str: "string", datetime.date: "date"}
+    kinds = {key_types.get(type(k)) for k, _p in exp_rows
+             if k is not None}
+    if None in kinds or len(kinds) > 1:
+        raise TypeError(
+            "expect_distribution: expected_shares keys must share one "
+            "plain scalar type (bool, int, float, str or date), got "
+            f"{sorted({type(k).__name__ for k in expected_shares})}")
+    cat_type = kinds.pop() if kinds else "string"
+    exp_df = (local_frame(spark, exp_rows,
+                          f"_cat_native {cat_type}, _p bigint")
+              .select(F.col("_cat_native").cast("string").alias("_cat"),
+                      "_p"))
     per_cat = (df.groupBy(F.col(col).cast("string").alias("_cat"))
                .agg(F.count(F.lit(1)).alias("_n")))
     # observed-only categories have expected share 0 (novel values
@@ -261,9 +275,10 @@ def expect_schema(df: DataFrame, expected_ddl: str,
     bad = sum(1 for k, t in expected.items() if actual.get(k) != t)
     if not allow_extra:
         bad += sum(1 for k in actual if k not in expected)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(n, bad == 0, bad, 0)],
+    from ..sources.tables import local_frame
+
+    return local_frame(
+        df.sparkSession, [(n, bad == 0, bad, 0)],
         "expectation string, passed boolean, observed bigint, "
         "threshold bigint")
 

@@ -339,6 +339,8 @@ def hdr_quantiles(table: DataFrame, qs: list[tuple[int, int]],
     partitions, never data-sized)."""
     from pyspark.sql import Window
 
+    from ..sources.tables import local_frame
+
     groups = list(by or [])
     spark = table.sparkSession
     cum = table.withColumn(
@@ -346,7 +348,7 @@ def hdr_quantiles(table: DataFrame, qs: list[tuple[int, int]],
             Window.partitionBy(*groups).orderBy("lb")
             .rowsBetween(Window.unboundedPreceding, 0)))
     tot = table.groupBy(*groups).agg(F.sum("n").cast("bigint").alias("_n"))
-    qdf = spark.createDataFrame(qs, "q_num bigint, q_den bigint")
+    qdf = local_frame(spark, qs, "q_num bigint, q_den bigint")
     if groups:
         joined = cum.join(F.broadcast(tot), groups)
     else:

@@ -47,6 +47,8 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .tables import local_frame
+
 __all__ = ["read_avro", "write_avro", "AVRO_MAGIC"]
 
 AVRO_MAGIC = b"Obj\x01"
@@ -532,6 +534,6 @@ def read_avro(spark: SparkSession, path: str,
                 yield pa.RecordBatch.from_pylist(data,
                                                  schema=arrow_schema)
 
-    flist = spark.createDataFrame([(f,) for f in files], "f string") \
+    flist = local_frame(spark, [(f,) for f in files], "f string") \
         .repartition(len(files), "f")
     return flist.mapInArrow(_reader, schema)

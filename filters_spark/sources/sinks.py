@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import ERRORS_COL, ValidationResult
+from .tables import local_frame
 
 __all__ = [
     "write_clean",
@@ -269,4 +270,4 @@ def write_tar_shards(df, dir_path: str, name_col: str = "member_name",
     manifest_rows = (assigned.repartition(n_shards, "_shard")
                      .mapInPandas(pack, out_schema)
                      .collect())
-    return df.sparkSession.createDataFrame(manifest_rows, out_schema)
+    return local_frame(df.sparkSession, manifest_rows, out_schema)

@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -78,6 +79,51 @@ def get_spark(app_name: str = "filters_spark", shuffle_partitions: int | None = 
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+#: Field types a non-empty :func:`local_frame` may carry — the plain
+#: Python scalars (int, float, str, bool, datetime.date, None).
+_LOCAL_SCALARS = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                  T.FloatType, T.DoubleType, T.StringType, T.BooleanType,
+                  T.DateType)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built frame (empty frames, metadata answers, file
+    lists) that Spark plans as a ``LocalRelation``: the rows travel
+    as one Arrow table, so collecting the frame runs no job and an
+    empty one is pruned out of unions and joins at plan time
+    (``PropagateEmptyRelation``).  ``createDataFrame(list)`` instead
+    plans a ``LogicalRDD`` over ``sc.parallelize`` — every action on
+    it runs ``defaultParallelism`` Python-worker tasks, row-less or
+    not.  (Spark itself falls back to an RDD above
+    ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB —
+    far beyond any metadata frame.)
+
+    ``schema`` is a ``StructType`` or a DDL string.  Rows are tuples
+    of plain scalars: a non-empty frame may only have int, float,
+    string, boolean or date fields (a timestamp would change naive-
+    datetime semantics on the Arrow path) — any other field type
+    raises ``TypeError``.  An empty frame keeps any schema exactly."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = [tuple(r) for r in rows]
+    if rows:
+        bad = [f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+               if not isinstance(f.dataType, _LOCAL_SCALARS)]
+        if bad:
+            raise TypeError(
+                "local_frame: rows need plain scalar fields, got "
+                f"{', '.join(bad)}")
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 # DataFrame handles are immutable plans — safe to reuse across calls.

@@ -61,6 +61,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (callers compose)
 from pyspark.sql import types as T
 
+from .tables import local_frame
+
 __all__ = [
     "ConcurrentWriteError",
     "ContractViolation",
@@ -353,7 +355,7 @@ def _file_stats(snap: str, stats_cols: list[str],
                 yield pd.DataFrame(out, columns=["file", "stats"])
 
         n = min(len(files), spark.sparkContext.defaultParallelism)
-        rows = (spark.createDataFrame([(f,) for f in files], "file string")
+        rows = (local_frame(spark, [(f,) for f in files], "file string")
                 .repartition(n, "file")
                 .mapInPandas(_read, "file string, stats string")
                 .collect())               # bounded: one small row/file
@@ -703,9 +705,10 @@ def stats_aggregate(spark: SparkSession, path: str,
     """METADATA-ONLY aggregates over a versioned table (r10 VERDICT
     #5 — Delta answers ``SELECT COUNT(*)`` from its log): serve
     ``count``/``min``/``max`` from the manifest + stats sidecar with
-    ZERO data-reading tasks — the returned frame is a driver-built
-    one-row literal whose plan contains no file scan (the gate
-    asserts it).
+    ZERO tasks — the returned frame is a one-row
+    :func:`~filters_spark.sources.tables.local_frame` literal whose
+    plan contains no file scan (the gate asserts it), so collecting
+    it runs no Spark job at all.
 
     ``aggs`` is ``[(fn, col, alias), ...]`` with fn ∈ {count, min,
     max} (``count`` takes col=None: COUNT(*)).  Facts used: per-file
@@ -805,7 +808,8 @@ def stats_aggregate(spark: SparkSession, path: str,
     schema = T.StructType.fromJson(json.loads(m["schema_json"]))
     types = {f.name: f.dataType for f in schema.fields}
 
-    meta_cols = sorted({c for _f, c, _a in aggs if c is not None}
+    meta_cols = sorted({c[0] if fn == "approx_quantile" else c
+                        for fn, c, _a in aggs if c is not None}
                        | ({where[0]} if where is not None else set()))
 
     def file_meta(f: str) -> dict:
@@ -917,9 +921,8 @@ def stats_aggregate(spark: SparkSession, path: str,
                 best = v
         row[alias] = best
         out_fields.append(T.StructField(alias, types[col]))
-    return spark.createDataFrame(
-        [tuple(row[f.name] for f in out_fields)],
-        T.StructType(out_fields))
+    return local_frame(spark, [tuple(row[f.name] for f in out_fields)],
+                       T.StructType(out_fields))
 
 
 def _dv_dir(path: str, version: int) -> str:
@@ -979,7 +982,7 @@ def _detect_frame(spark: SparkSession, path: str,
     schema = T.StructType.fromJson(json.loads(manifest["schema_json"]))
     files = _root_files(path, manifest)
     if not files:
-        return spark.createDataFrame([], schema) \
+        return local_frame(spark, [], schema) \
             .withColumn("_f", F.lit(""))
     raw = (spark.read.schema(schema).parquet(
         *[os.path.join(path, f) for f in files])
@@ -1136,6 +1139,7 @@ def write_versioned(df: DataFrame, path: str,
     version = max(versions(path) + [parent or 0]) + 1
     claim = _claim(path, version)
     _pool: ThreadPoolExecutor | None = None
+    _cfut = _dfut = None
     try:
         snap = _snap_dir(path, version)
         # The commit's SIDE WRITES (stored change feed, delete-vector
@@ -1151,7 +1155,6 @@ def write_versioned(df: DataFrame, path: str,
         # thread's Spark local properties: its jobs stay in the
         # caller's job group, and the two writes' SQL executions never
         # share one properties object.
-        _cfut = _dfut = None
         if dv_df is not None:
             # validate BEFORE the async write starts (fail-fast
             # semantics unchanged)
@@ -1326,6 +1329,25 @@ def write_versioned(df: DataFrame, path: str,
                 os.remove(hclaim)
             except FileNotFoundError:
                 pass
+    except BaseException as exc:
+        if _pool is not None:
+            # A failed commit cancels side-writes still queued and
+            # joins the running ones: their Spark jobs cannot be
+            # recalled, and the version claim must not be released
+            # while one still writes into this version's directories.
+            # A side-write's own failure rides on the primary error
+            # instead of vanishing with its unread future.
+            _pool.shutdown(wait=True, cancel_futures=True)
+            for what, fut in (("change-feed", _cfut),
+                              ("delete-vector", _dfut)):
+                side = (fut.exception() if fut is not None
+                        and not fut.cancelled() else None)
+                if side is not None and side is not exc:
+                    exc.add_note(
+                        f"write_versioned: the {what} side-write of "
+                        f"version {version} also failed: "
+                        f"{type(side).__name__}: {side}")
+        raise
     finally:
         if _pool is not None:
             _pool.shutdown(wait=True)
@@ -1442,7 +1464,7 @@ def read_version(spark: SparkSession, path: str,
                 files = kept
             files = bloom_prune_files(manifest, where, files)
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return apply_delete_vectors(
             spark, path, manifest,
             spark.read.schema(schema).parquet(
@@ -1466,7 +1488,7 @@ def read_version(spark: SparkSession, path: str,
         if files is not None:
             files = bloom_prune_files(manifest, where, files)
             if not files:
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, [], schema)
             # basePath keeps Hive partition columns resolvable when
             # reading explicit pruned paths (no-op for flat snapshots)
             return apply_delete_vectors(
@@ -1762,7 +1784,7 @@ def _merge_commit(spark, path, key, m, base, aligned, parent_detect,
         sub = (apply_delete_vectors(
             spark, path, m, spark.read.schema(schema).parquet(
                 *[os.path.join(path, f) for f in touched]))
-            if touched else spark.createDataFrame([], schema))
+            if touched else local_frame(spark, [], schema))
         # The stored feed only needs BASE rows whose key the batch
         # touches, and every such row lives in a touched file (that
         # is the definition of touched) — so the feed's base side is
@@ -1913,10 +1935,10 @@ def delete_where(spark: SparkSession, path: str, condition,
                 F.regexp_extract(F.col("_f"), _DV_TAIL, 1)
                 .alias("_file"), key) if n_deleted else None)
             changes = changes_of(hits.drop("_f")) if n_deleted \
-                else changes_of(spark.createDataFrame([], schema))
+                else changes_of(local_frame(spark, [], schema))
             parent_files = _root_files(path, m)
             version = write_versioned(
-                spark.createDataFrame([], schema), path,
+                local_frame(spark, [], schema), path,
                 expected_parent=expected_parent, _op="delete",
                 extra_meta={"delete_mode": "mor"},
                 stats_cols=stats_cols, changes_df=changes,
@@ -1957,7 +1979,7 @@ def delete_where(spark: SparkSession, path: str, condition,
         replacement = sub.where(~hit)
         changes = changes_of(sub.where(hit))
     else:
-        replacement = spark.createDataFrame([], schema)
+        replacement = local_frame(spark, [], schema)
         changes = changes_of(replacement)
     version = write_versioned(
         replacement, path, expected_parent=expected_parent,
@@ -2119,7 +2141,7 @@ def update_where(spark: SparkSession, path: str, condition,
                                     F.lit(True))
                            .select(*[f.name for f in schema.fields])
                            if n_changed
-                           else spark.createDataFrame([], schema))
+                           else local_frame(spark, [], schema))
             version = write_versioned(
                 replacement, path, expected_parent=expected_parent,
                 _op="update", extra_meta={"update_mode": "mor"},
@@ -2172,7 +2194,7 @@ def update_where(spark: SparkSession, path: str, condition,
         replacement = apply_to(sub, hit)
         changes = changes_of(pre)
     else:
-        replacement = spark.createDataFrame([], schema)
+        replacement = local_frame(spark, [], schema)
         changes = changes_of(replacement)
     version = write_versioned(
         replacement, path, expected_parent=expected_parent,
@@ -2211,7 +2233,7 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
               "has_changes boolean, file_reuse boolean, "
               "restored_from long, stream_query string, "
               "stream_batch long, committed_at double")
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def restore_version(spark: SparkSession, path: str, version: int,
@@ -2296,7 +2318,7 @@ def restore_version(spark: SparkSession, path: str, version: int,
             f"vacuumed (delete-vector dirs {dv_gone} gone) — only "
             "retained versions can be restored")
     schema = T.StructType.fromJson(json.loads(m_old["schema_json"]))
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     # Sidecar config travels WITH the carried entries (_carry_from):
     # inheriting the current HEAD's config instead would probe bitmaps
     # built under m_old's sizing with HEAD's parameters — silent false
@@ -2382,7 +2404,7 @@ def clone_versioned(spark: SparkSession, src: str, dst: str,
     refs = [os.path.relpath(os.path.join(src_abs, f), dst_abs)
             .replace(os.sep, "/") for f in files]
     schema = T.StructType.fromJson(json.loads(m["schema_json"]))
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     # Delete vectors are REWRITTEN into the clone's own tree (one
     # delete-sized copy, dv/v=1): the (file-tail, key) entries stay
     # valid — the tail extraction is root-invariant — while keeping

@@ -45,6 +45,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .tables import local_frame
+
 __all__ = ["read_warc", "write_warc"]
 
 _CRLF = b"\r\n"
@@ -225,7 +227,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                         })
                 yield pa.RecordBatch.from_pylist(rows, schema=target)
 
-    flist = spark.createDataFrame([(f,) for f in files], "f string") \
+    flist = local_frame(spark, [(f,) for f in files], "f string") \
         .repartition(len(files), "f")
     return flist.mapInArrow(_reader, _WARC_SCHEMA)
 

@@ -364,6 +364,7 @@ def apply_changes_sink(table_path: str, key: str,
             f"{mode!r}")
     from ..plans.joins import upsert
     from ..sources import versioned as V
+    from ..sources.tables import local_frame
     from .validate import _sink_identity
 
     def write(batch_df, batch_id: int) -> None:
@@ -440,7 +441,7 @@ def apply_changes_sink(table_path: str, key: str,
         sub = (V.apply_delete_vectors(
             spark, table_path, m, spark.read.schema(schema).parquet(
                 *[os.path.join(table_path, f) for f in touched]))
-            if touched else spark.createDataFrame([], schema))
+            if touched else local_frame(spark, [], schema))
         merged = upsert(sub, aligned, key) \
             .join(del_keys, key, "left_anti")
         V.write_versioned(

@@ -85,6 +85,30 @@ class TestCommitProtocol:
         os.remove(claim)
         assert V.write_versioned(_df(spark, [(2, "b", 2)]), tpath) == 2
 
+    def test_failed_commit_keeps_side_write_error(self, spark, tpath,
+                                                  monkeypatch):
+        """The data write fails while the overlapped change-feed write
+        fails too: the raised error carries both, and the head stays."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        V.write_versioned(_df(spark, [(1, "a", 1)]), tpath)
+        real = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            if f"{os.sep}changes{os.sep}" in path:
+                raise RuntimeError("change feed disk full")
+            if f"{os.sep}snap{os.sep}" in path:
+                raise RuntimeError("snapshot disk full")
+            return real(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        batch = _df(spark, [(2, "b", 2)])
+        with pytest.raises(RuntimeError, match="snapshot disk full") as ei:
+            V.write_versioned(batch, tpath, changes_df=batch)
+        assert "change feed disk full" in \
+            "\n".join(getattr(ei.value, "__notes__", []))
+        assert V.latest_version(tpath) == 1
+
     def test_crashed_writer_invisible_to_readers(self, spark, tpath):
         """Data + manifest written but pointer never flipped: readers
         still see the old head; the next commit skips past the
@@ -2480,6 +2504,20 @@ class TestHdrSidecars:
             V.stats_aggregate(spark, t, [
                 ("approx_quantile", "v", "p")])
 
+    def test_quantile_mixes_with_other_aggs(self, spark, tmp_path):
+        t = str(tmp_path / "t")
+        df = spark.range(1, 3001).select(
+            F.col("id").alias("k"), (F.col("id") % 997 + 1).alias("v"))
+        V.write_versioned(df.repartitionByRange(4, "k"), t,
+                          stats_cols=["k"], hdr_cols=["v"])
+        count_max = [("count", None, "n"), ("max", "k", "kmax")]
+        quantile = [("approx_quantile", ("v", 1, 2), "p50")]
+        [a] = V.stats_aggregate(spark, t, count_max).collect()
+        [b] = V.stats_aggregate(spark, t, quantile).collect()
+        [both] = V.stats_aggregate(spark, t, count_max + quantile).collect()
+        assert both.asDict() == {**a.asDict(), **b.asDict()}
+        assert (a["n"], a["kmax"]) == (3000, 3000)
+
     def test_nonpositive_values_fail_commit(self, spark, tmp_path):
         import pytest
         df = spark.range(0, 10).select(F.col("id").alias("v"))
@@ -2912,3 +2950,129 @@ class TestSelectiveCompaction:
         assert m.get("bloom_cols") == ["k"]
         assert V.read_version(spark, t, where=("k", 4242, 4242)).where(
             F.col("k") == 4242).count() == 1
+
+
+class TestLocalFrames:
+    """Driver-built frames are Arrow-built LocalRelations: a bloom-
+    pruned absent-key read and the metadata answers run no Spark job,
+    and a point-lookup union runs one task per file it reads."""
+
+    @staticmethod
+    def _jobs(spark, group, action):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "local-frame job budget")
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        tasks = sum(st.getStageInfo(s).numTasks for j in jobs
+                    for s in st.getJobInfo(j).stageIds)
+        return len(jobs), tasks
+
+    @staticmethod
+    def _table(spark, tmp_path):
+        # every file spans the whole key range (min/max cannot prune);
+        # keys are even, so an odd probe is absent and only the bloom
+        # sidecar can prune it
+        t = str(tmp_path / "t")
+        df = spark.range(0, 4000).select(
+            (F.col("id") * 2).alias("k"), (F.col("id") % 97).alias("v"))
+        V.write_versioned(df.repartition(8, "v"), t, stats_cols=["k", "v"],
+                          bloom_cols=["k"])
+        return t
+
+    @staticmethod
+    def _absent(spark, t, n):
+        out = [k for k in range(1, 400, 2) if not V.read_version(
+            spark, t, where=("k", k, k)).inputFiles()]
+        assert len(out) >= n
+        return out[:n]
+
+    def test_absent_key_read_runs_no_job(self, spark, tmp_path):
+        t = self._table(spark, tmp_path)
+        [k] = self._absent(spark, t, 1)
+        df = V.read_version(spark, t, where=("k", k, k))
+        jobs, _ = self._jobs(spark, "lf-absent", df.collect)
+        assert jobs == 0
+        assert df.collect() == []
+
+    def test_point_lookup_tasks_equal_files_read(self, spark, tmp_path):
+        t = self._table(spark, tmp_path)
+        keys = [10, 2000, 7998] + self._absent(spark, t, 2)
+        dfs = [V.read_version(spark, t, where=("k", k, k))
+               .where(F.col("k") == k) for k in keys]
+        union = dfs[0]
+        for df in dfs[1:]:
+            union = union.unionByName(df)
+        out = []
+        jobs, tasks = self._jobs(
+            spark, "lf-lookup", lambda: out.extend(union.collect()))
+        assert sorted(r["k"] for r in out) == [10, 2000, 7998]
+        assert jobs == 1
+        assert tasks == sum(len(df.inputFiles()) for df in dfs)
+
+    def test_metadata_answers_run_no_job(self, spark, tmp_path):
+        t = self._table(spark, tmp_path)
+        agg = V.stats_aggregate(spark, t, [
+            ("count", None, "n"), ("min", "k", "lo"), ("max", "v", "hi")])
+        hist = V.table_history(spark, t)
+        assert self._jobs(spark, "lf-meta", lambda: (
+            agg.collect(), hist.collect()))[0] == 0
+        [r] = agg.collect()
+        assert (r["n"], r["lo"], r["hi"]) == (4000, 0, 96)
+        assert [h["op"] for h in hist.collect()] == ["write"]
+
+    def test_empty_frame_keeps_schema(self, spark):
+        from pyspark.sql import types as T
+
+        from filters_spark.sources.tables import local_frame
+
+        schema = T.StructType([
+            T.StructField("d", T.DateType(), False),
+            T.StructField("x", T.DecimalType(12, 2), True),
+            T.StructField("s", T.StructType([
+                T.StructField("a", T.ArrayType(T.IntegerType(), False),
+                              True),
+                T.StructField("m", T.StringType(), False)]), True),
+            T.StructField("v", T.VariantType(), True)])
+        df = local_frame(spark, [], schema)
+        assert df.select("*").schema == schema      # as the JVM plans it
+        assert "LocalRelation" in \
+            df._jdf.queryExecution().optimizedPlan().toString()
+        assert df.collect() == []
+        with pytest.raises(TypeError, match="ts timestamp"):
+            local_frame(spark, [(1, None)], "n bigint, ts timestamp")
+
+    def test_driver_frames_go_through_local_frame(self):
+        """Idiom guard: in sources/, streaming/ and the converted
+        functions/ modules, ``createDataFrame(`` appears only inside
+        ``local_frame`` — the list-built ``LogicalRDD`` path, whose
+        every action runs row-less Python-worker tasks, stays out."""
+        import ast
+
+        pkg = os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "filters_spark")
+        files = [os.path.join(pkg, "functions", f)
+                 for f in ("expectations.py", "sketch.py")]
+        for sub in ("sources", "streaming"):
+            files += [os.path.join(pkg, sub, f) for f in
+                      sorted(os.listdir(os.path.join(pkg, sub)))
+                      if f.endswith(".py")]
+        offenders = []
+        for path in files:
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            allowed = {id(n) for fn in ast.walk(tree)
+                       if isinstance(fn, ast.FunctionDef)
+                       and fn.name == "local_frame"
+                       for n in ast.walk(fn)}
+            offenders += [
+                f"{os.path.relpath(path, pkg)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "createDataFrame"
+                and id(n) not in allowed]
+        assert offenders == []
